@@ -182,10 +182,6 @@ def main() -> None:
         # cross-phase caching — the catalog is parquet-backed — so
         # clear between phases (and between repeat runs); cleanup time
         # is excluded from the phase's own measurement on purpose.
-        # clearCache drops EVERY cached block, including the per-phase
-        # engines' CORRELATE intermediates and gate-registry frames;
-        # release_gate_caches also empties the registry bookkeeping.
-        gate.release_gate_caches()
         spark.catalog.clearCache()
         # ContextCleaner's periodic GC defaults to 30 min — longer than
         # this whole run — so weakly-referenced broadcast / shuffle

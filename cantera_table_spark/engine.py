@@ -23,6 +23,7 @@ from cantera_table_spark.functions.dates import (
 )
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.operators import set_algebra as sa
+from cantera_table_spark.session import recording
 
 
 class Engine:
@@ -47,9 +48,8 @@ class Engine:
         # session parameters (reference SET statement, statement.cc:35-48;
         # default CSV per output.cc:32)
         self.output_format = "csv"
-        # cached intermediates registered by CORRELATE runs; release
-        # with release_caches() after consuming their results
-        self._correlate_caches: list = []
+        # frames persisted by CORRELATE statements; see release_caches
+        self._persisted: list = []
         self.time_format = "%Y-%m-%d %H:%M:%S"
 
     def register_views(self, prefix: str = "") -> None:
@@ -65,12 +65,12 @@ class Engine:
             ov.createOrReplaceTempView(f"{prefix}overrides")
 
     def release_caches(self) -> None:
-        """Unpersist intermediates cached by CORRELATE statements (call
+        """Unpersist the frames this engine's statements persisted (call
         after consuming their result DataFrames in long-lived
         sessions)."""
-        for df in self._correlate_caches:
+        for df in self._persisted:
             df.unpersist()
-        self._correlate_caches.clear()
+        self._persisted.clear()
 
     def _compiler(self) -> QueryCompiler:
         return QueryCompiler(self.catalog,
@@ -97,7 +97,8 @@ class Engine:
             return self.select_stmt(stmt)
         if isinstance(stmt, ast.CorrelateStmt):
             from cantera_table_spark.operators.correlate import correlate
-            return correlate(self, stmt.query_a, stmt.query_b)
+            with recording(self._persisted):
+                return correlate(self, stmt.query_a, stmt.query_b)
         if isinstance(stmt, ast.ParseStmt):
             return ast.format_query(stmt.query)
         if isinstance(stmt, ast.SetStmt):

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cantera_table_spark.functions.text import tokens
+from cantera_table_spark.session import persist
 
 MINHASH_PRIME = 4_294_967_311          # smallest prime > 2^32
 
@@ -466,7 +467,6 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
 
 def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
                        max_iters: int = 20,
-                       caches: list | None = None,
                        small_graph_edges: int = 100_000) -> DataFrame:
     """Connected components over verified duplicate pairs: every doc
     gets the minimum doc_id reachable through the pair graph as its
@@ -482,12 +482,12 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     rounds.  The driver only sees a changed-row count per iteration.
     Non-convergence within ``max_iters`` (a component with diameter >
     max_iters) raises instead of silently returning partial labels.
-    The subgraph labels backing the returned DataFrame are
-    Spark-cached, and the returned frame is an (uncached) join over
-    them — unpersisting the RESULT would free nothing.  Pass ``caches``
-    (a list) to receive the cached label frame so a long-lived session
-    can ``unpersist()`` it after consuming the result (the same
-    contract as operators.correlate.correlate_sets).
+    On the distributed path the subgraph labels backing the returned
+    DataFrame are Spark-cached through ``session.persist``, and the
+    returned frame is an (uncached) join over them — unpersisting the
+    RESULT would free nothing.  Consume the result inside
+    ``session.cache_scope()`` to have the labels freed on exit (the
+    same contract as operators.correlate.correlate_sets).
 
     Graphs with at most ``small_graph_edges`` edges skip the
     distributed rounds entirely: one bounded collect + driver-side
@@ -499,8 +499,6 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     uses for its k x dim centroid matrix.  Pass 0 to force the
     distributed path.
     """
-    if caches is None:
-        caches = []
     # Cache the symmetrized edge list: its lineage is the whole
     # candidate-generation + verification pipeline (LSH -> jaccard),
     # and every propagation round joins it — without the cache each
@@ -591,7 +589,7 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
             # cached result, so labels is fully materialized and the
             # edge cache can go
             edges.unpersist()
-            caches.append(prev_cached)
+            persist(prev_cached)    # outlives the call: record it
             # map every corpus doc: subgraph label if present, else
             # itself — the ONLY corpus-sized operation in the routine
             return (ids.select("doc_id")
@@ -615,8 +613,7 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 16,
                       bands: int = 4, min_jaccard: float = 0.12,
                       max_bucket: int | None = None,
-                      max_df: int | None = None,
-                      caches: list | None = None) -> DataFrame:
+                      max_df: int | None = None) -> DataFrame:
     """The full dedup pipeline a pretraining corpus actually runs:
     exact-collapse identical texts by content hash FIRST, run the
     near-dup stack (shingles -> MinHash -> LSH -> Jaccard verify ->
@@ -669,8 +666,7 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
                            min_jaccard=min_jaccard,
                            candidates=cands, max_df=max_df)
              .select("doc_a", "doc_b"))
-    rep_labels = duplicate_clusters(reps.select("doc_id"), pairs,
-                                    caches=caches)
+    rep_labels = duplicate_clusters(reps.select("doc_id"), pairs)
     return (membership
             .join(rep_labels.select(F.col("doc_id").alias("rep_id"),
                                     "canonical_id"), "rep_id")

@@ -470,8 +470,9 @@ def _magnitude(v: int) -> tuple[int, int]:
 def encode_jpeg(pixels_rgb: bytes, width: int, height: int,
                 quality: int = 90) -> bytes:
     """Baseline sequential JFIF encoder, stdlib + numpy only: YCbCr
-    4:4:4, one vectorized DCT einsum per component, Annex K quantization
-    (IJG quality scaling) and Huffman tables.  No subsampling and no
+    4:4:4, all three components through one stacked broadcast matmul
+    pair (D @ blocks @ D^T), Annex K quantization (IJG quality
+    scaling) and Huffman tables.  No subsampling and no
     restart intervals — every block carries full chroma, which keeps
     the constant-block reconstruction exact (the mm08 oracle contract).
     """

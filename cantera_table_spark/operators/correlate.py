@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cantera_table_spark.dsl import ast as _ast
+from cantera_table_spark.session import persist
 
 LOGIT_CUTOFF = math.log(0.55 / 0.45)   # correlate.cc:141-142
 # The output filter compares the ROUNDED 3-decimal log-odds (the output
@@ -74,14 +75,13 @@ def _persist(df: DataFrame) -> DataFrame:
     if level.upper() == "NONE":
         return df
     from pyspark import StorageLevel
-    return df.persist(getattr(StorageLevel, level.upper()))
+    return persist(df, getattr(StorageLevel, level.upper()))
 
 _POS_INF = float("inf")
 _NEG_INF = float("-inf")
 
 
 def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
-                   caches: list | None = None,
                    unique_docs: bool = False,
                    presplit: bool = False) -> DataFrame:
     """Core pipeline given resolved doc sets.
@@ -119,13 +119,12 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     doc_id).
 
     Intermediates (the histogram and the tiny per-keyword kind/split
-    tables) are Spark-cached because several downstream branches reuse
-    them; pass ``caches`` (a list) to receive the cached DataFrames so
-    a long-lived session can ``unpersist()`` them after consuming the
-    result (Engine.release_caches does this).
+    tables) are Spark-cached through ``session.persist`` because
+    several downstream branches reuse them, and the returned lazy frame
+    still reads them.  Run the call and consume its result inside
+    ``session.cache_scope()`` (or an Engine statement, freed by
+    Engine.release_caches) to have them unpersisted afterwards.
     """
-    if caches is None:
-        caches = []
     if presplit:
         a = set_a.select("doc_id")
         b = set_b.select("doc_id")
@@ -168,7 +167,6 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
         # class-joined rows; without the persist that branch re-runs
         # the postings scan + class joins
         k = _persist(k)
-        caches.append(k)
 
     # THE one postings-scale shuffle: per-(keyword, distinct score)
     # class histogram.  Collapses ties exactly like the reference's
@@ -180,7 +178,6 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
               F.count(F.col("cls")).alias("__n_cls"),
               F.count("*").alias("__n_all")))
     h = _persist(h)
-    caches.append(h)
 
     # --- split search on continuous keywords --------------------------
     # boolean feature <=> every score is zero (correlate.cc:211-217).
@@ -189,11 +186,10 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     # once per branch.  __n_rows carries the reference's min-support
     # keyword prefilter (correlate.cc:541-543), now a histogram rollup
     # instead of a postings-scale groupBy + join.
-    kind = h.groupBy("keyword").agg(
+    kind = persist(h.groupBy("keyword").agg(
         (F.max(F.abs(F.col("score"))) > 0.0).alias("__continuous"),
         F.sum("__n_cls").alias("__n_classes"),
-        F.sum("__n_all").alias("__n_rows")).cache()
-    caches.append(kind)
+        F.sum("__n_all").alias("__n_rows")))
 
     # per-(keyword, score) rows restricted to CLASS rows of qualifying
     # continuous keywords — the r11 per_score table, read straight off
@@ -264,15 +260,14 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
                 .orderBy(F.col("__gain").desc(), F.col("score").asc())))
             .filter(F.col("__rk") == 1))
 
-    split = (best
-             .withColumn("__use_split",
-                         (F.col("__pos") > 1) &
-                         (F.col("__pos") < F.col("__npos")) &
-                         (F.col("__gain") >= MIN_GAIN))
-             .select("keyword", "__use_split",
-                     F.col("score").alias("__mid"),
-                     F.col("__next").alias("__next_score"))).cache()
-    caches.append(split)
+    split = persist(best
+                    .withColumn("__use_split",
+                                (F.col("__pos") > 1) &
+                                (F.col("__pos") < F.col("__npos")) &
+                                (F.col("__gain") >= MIN_GAIN))
+                    .select("keyword", "__use_split",
+                            F.col("score").alias("__mid"),
+                            F.col("__next").alias("__next_score")))
 
     # --- assemble range tasks -----------------------------------------
     # whole-range: boolean keywords + continuous without a useful split;
@@ -482,5 +477,4 @@ def correlate(engine, query_a, query_b) -> DataFrame:
                 ts_keys, set_a, _time.time() / 86400.0)
         postings = plain.unionByName(ts_filtered)
     return correlate_sets(postings, set_a, set_b,
-                          caches=engine._correlate_caches,
                           unique_docs=engine.unique_postings)

@@ -15,8 +15,49 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Frame lists of the cache scopes open in this thread / task.
+_open_scopes: ContextVar[tuple] = ContextVar("open_scopes", default=())
+
+
+def persist(df: DataFrame, level=None) -> DataFrame:
+    """Persist ``df`` unless it already is (``df.persist(level)``, or
+    ``df.cache()`` without a StorageLevel) and record it with every
+    open cache scope.  For frames that outlive the function persisting
+    them, because the lazy result it returns still reads them."""
+    if not df.is_cached:
+        df = df.cache() if level is None else df.persist(level)
+    for frames in _open_scopes.get():
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def recording(frames: list):
+    """Append to ``frames`` every frame :func:`persist` persists while
+    the block runs; freeing them stays with the owner of ``frames``."""
+    token = _open_scopes.set(_open_scopes.get() + (frames,))
+    try:
+        yield frames
+    finally:
+        _open_scopes.reset(token)
+
+
+@contextmanager
+def cache_scope():
+    """Yield the list of frames persisted while the block runs and
+    unpersist them on exit, exit by exception included.  Consume the
+    lazy results inside the block; read later, they recompute."""
+    with recording([]) as frames:
+        try:
+            yield frames
+        finally:
+            for df in frames:
+                df.unpersist()
 
 
 def get_spark(app_name: str = "cantera-table-spark",

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from cantera_table_spark.operators.correlate import (
     correlate_sets, filter_by_timestamp_now, filter_by_timestamp_sets,
 )
+from cantera_table_spark.session import cache_scope
 
 P_SCHEMA = "keyword string, doc_id long, score double"
 S_SCHEMA = "doc_id long, score double"
@@ -125,16 +126,11 @@ def test_correlate_presplit_fast_path_matches_default(spark):
     postings = spark.createDataFrame(
         [("f", i, 0.0) for i in range(8)] + [("f", 10, 0.0)] +
         [("g", i, float(i % 4)) for i in range(15)], P_SCHEMA)
-    caches = []
-    try:
-        want = rows(correlate_sets(postings, a, b, caches=caches))
-        got = rows(correlate_sets(postings, a, b, caches=caches,
-                                  presplit=True))
-        got_u = rows(correlate_sets(postings, a, b, caches=caches,
-                                    presplit=True, unique_docs=True))
-    finally:
-        for c in caches:
-            c.unpersist()
+    with cache_scope():
+        want = rows(correlate_sets(postings, a, b))
+        got = rows(correlate_sets(postings, a, b, presplit=True))
+        got_u = rows(correlate_sets(postings, a, b, presplit=True,
+                                    unique_docs=True))
     assert got == want
     assert got_u == want
     assert len(want) >= 1
@@ -158,7 +154,7 @@ def test_filter_by_timestamp_now(spark):
 def test_statement_path_timestamped_with_ephemeral_skip(spark):
     """Drive CORRELATE through Engine.execute_script with a timestamped
     primary keyword: ephemeral features must be excluded, the as-of
-    filter must apply, and release_caches() must clear the registered
+    filter must apply, and release_caches() must free the persisted
     intermediates (statement entry path, correlate.cc:482-573)."""
     from cantera_table_spark.engine import Engine
     from cantera_table_spark.model import Catalog
@@ -187,9 +183,10 @@ def test_statement_path_timestamped_with_ephemeral_skip(spark):
     assert "alexa:rank" not in got          # ephemeral skipped
     assert got["ts:sig"] == (8, 0)          # as-of: 90 < 100 kept, aged
     assert got["plain"] == (0, 9)
-    assert eng._correlate_caches            # intermediates registered
+    persisted = list(eng._persisted)        # intermediates recorded
+    assert persisted and all(c.is_cached for c in persisted)
     eng.release_caches()
-    assert not eng._correlate_caches
+    assert not any(c.is_cached for c in persisted)
 
 
 # --- randomized model-based law: full pipeline vs pure-Python model ---
@@ -296,12 +293,8 @@ def test_correlate_matches_model(spark, postings, set_a, set_b):
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_b] or [], S_SCHEMA)
-    caches = []
-    try:
-        got = _spark_rows(correlate_sets(pdf, adf, bdf, caches=caches))
-    finally:
-        for c in caches:
-            c.unpersist()
+    with cache_scope():
+        got = _spark_rows(correlate_sets(pdf, adf, bdf))
     assert got == want
 
 
@@ -326,13 +319,8 @@ def test_correlate_unique_docs_path_matches_model(spark, postings,
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_b] or [], S_SCHEMA)
-    caches = []
-    try:
-        got = _spark_rows(correlate_sets(pdf, adf, bdf, caches=caches,
-                                         unique_docs=True))
-    finally:
-        for c in caches:
-            c.unpersist()
+    with cache_scope():
+        got = _spark_rows(correlate_sets(pdf, adf, bdf, unique_docs=True))
     assert got == want
 
 

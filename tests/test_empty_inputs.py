@@ -15,6 +15,7 @@ divergence.
 import pytest
 
 import cantera_table_spark.gate as gate
+from cantera_table_spark.session import cache_scope
 from tools.edge_data import write_empty
 
 # one per family + the three first-run catches; the four instances
@@ -50,6 +51,5 @@ def empty_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", REPRESENTATIVES)
 def test_gate_degrades_to_empty(spark, empty_dir, name):
-    df = gate.queries()[name](spark, empty_dir)
-    assert df.count() == 0
-    gate.release_gate_caches()
+    with cache_scope():
+        assert gate.queries()[name](spark, empty_dir).count() == 0

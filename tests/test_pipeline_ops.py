@@ -4,6 +4,7 @@ text / multimodal)."""
 import pytest
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import cache_scope
 from tests.conftest import SF_SMOKE
 
 
@@ -185,12 +186,10 @@ def test_duplicate_clusters_transitivity(spark):
     assert out == want
     # distributed label-propagation path must produce the identical
     # labeling (small_graph_edges=0 forces it)
-    caches = []
-    out2 = {r.doc_id: r.canonical_id
-            for r in duplicate_clusters(ids, pairs, caches=caches,
-                                        small_graph_edges=0).collect()}
-    for c in caches:
-        c.unpersist()
+    with cache_scope():
+        out2 = {r.doc_id: r.canonical_id
+                for r in duplicate_clusters(ids, pairs,
+                                            small_graph_edges=0).collect()}
     assert out2 == want
 
 
@@ -434,25 +433,23 @@ def test_lsh_hot_bucket_bound(spark):
     assert all(p.doc_a == 0 for p in pairs)   # hub = min doc_id
 
     # default path: the star graph is under small_graph_edges, so the
-    # driver union-find runs and registers NO caches (nothing to free)
-    held = []
-    clusters = duplicate_clusters(
-        docs.select("doc_id"), bounded, caches=held)
-    labels = {r.doc_id: r.canonical_id for r in clusters.collect()}
+    # driver union-find runs and persists nothing (nothing to free)
+    with cache_scope() as held:
+        clusters = duplicate_clusters(docs.select("doc_id"), bounded)
+        labels = {r.doc_id: r.canonical_id for r in clusters.collect()}
     assert all(labels[i] == 0 for i in range(n_dup))
     assert labels[1000] == 1000 and labels[1001] == 1001
     assert not held
 
     # distributed path (small_graph_edges=0): identical labels, and the
-    # subgraph-label cache is surfaced through the caches contract
-    held = []
-    clusters_d = duplicate_clusters(
-        docs.select("doc_id"), bounded, caches=held, small_graph_edges=0)
-    labels_d = {r.doc_id: r.canonical_id for r in clusters_d.collect()}
+    # subgraph-label cache is recorded with the open scope
+    with cache_scope() as held:
+        clusters_d = duplicate_clusters(
+            docs.select("doc_id"), bounded, small_graph_edges=0)
+        labels_d = {r.doc_id: r.canonical_id for r in clusters_d.collect()}
+        assert len(held) == 1 and held[0].is_cached
     assert labels_d == labels
-    assert held and all(c.is_cached for c in held)
-    for c in held:
-        c.unpersist()
+    assert not held[0].is_cached
 
     # embedding variant: identical vectors flood one bucket the same way
     from cantera_table_spark.functions.similarity import lsh_near_dup_pairs

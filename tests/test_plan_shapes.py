@@ -9,6 +9,7 @@ from cantera_table_spark.dsl.parser import parse_script
 from cantera_table_spark.engine import Engine
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.plans.inspect import plan_facts
+from cantera_table_spark.session import cache_scope
 
 
 @pytest.fixture(scope="module")
@@ -374,9 +375,8 @@ def test_correlate_histogram_cached_once(spark):
                                                           "score")
     b = postings.filter(F.col("keyword") == "kw2").select("doc_id",
                                                           "score")
-    caches = []
-    try:
-        out = correlate_sets(postings, a, b, caches=caches)
+    with cache_scope() as caches:
+        out = correlate_sets(postings, a, b)
         c = _formatted_node_counts(out)
         # k (raw class join, countDistinct path) + h + kind + split
         assert len(caches) == 4, len(caches)
@@ -385,23 +385,15 @@ def test_correlate_histogram_cached_once(spark):
         # subtrees + the set A/B class builds
         assert c["Range"] <= 8, c["Range"]
         assert c["Window"] <= 5, c["Window"]
-    finally:
-        for cdf in caches:
-            cdf.unpersist()
 
     # with the unique_docs promise the raw class-joined rows have no
     # consumer outside the histogram build: one postings-scale shuffle
     # total, and only three cached frames
-    caches = []
-    try:
-        out = correlate_sets(postings, a, b, caches=caches,
-                             unique_docs=True)
+    with cache_scope() as caches:
+        out = correlate_sets(postings, a, b, unique_docs=True)
         assert len(caches) == 3, len(caches)
         c = _formatted_node_counts(out)
         assert c["Range"] <= 8, c["Range"]
-    finally:
-        for cdf in caches:
-            cdf.unpersist()
 
 
 def test_with_bands_is_single_shuffle_window(spark):
@@ -622,10 +614,8 @@ def test_hybrid_kw_list_is_bounded(spark):
     pl = _load("plan_lint")    # shared plan-tree-art parser
     qs = gate.queries()
     for name in ("ir02_rrf_hybrid", "ir03_bm25_hybrid"):
-        try:
+        with cache_scope():
             text = plan_facts(qs[name](spark, SF_SMOKE)).text
-        finally:
-            gate.release_gate_caches()
         lines = text.splitlines()
         pages = [i for i, ln in enumerate(lines)
                  if f"TakeOrderedAndProject(limit={gate.KW_CANDIDATES}"

@@ -4,6 +4,8 @@
 import importlib.util
 import os
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -40,88 +42,96 @@ def test_rotate_window_proposal_invariants():
         set(stats["sentinels"]) - head
 
 
-def test_gate_cache_registry_bounded_without_release(spark):
-    """r7 verdict stretch item: a third-party caller that materializes
-    caching gates without ever calling release_gate_caches() must see
-    bounded cache storage — the registry caps itself by unpersisting
-    the oldest entry past maxlen."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()          # clean slate
-    n = g._BoundedCacheList.maxlen + 5
-    frames = [spark.range(i + 1).cache() for i in range(n)]
-    for f in frames:
-        f.count()                    # materialize the cache
-        g._GATE_CACHES.append(f)
-    assert len(g._GATE_CACHES) == g._BoundedCacheList.maxlen
-    # the evicted oldest frames are no longer cached; the newest are
-    assert all(f.storageLevel.useMemory is False for f in frames[:5])
-    assert all(f.storageLevel.useMemory for f in frames[5:])
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
-    assert all(f.storageLevel.useMemory is False for f in frames)
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_gate_cache_registry_caps_every_mutation_path(spark):
-    """r8 advisory: the cap must hold for extend/insert/+=/slice
-    assignment too, not just append — any growth path a third-party
-    caller uses trims (and unpersists) down to maxlen."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    frames = [spark.range(i + 1).cache() for i in range(cap + 4)]
-    for f in frames:
-        f.count()
-    g._GATE_CACHES.extend(frames)            # bulk registration
-    assert len(g._GATE_CACHES) == cap
-    assert all(f.storageLevel.useMemory is False for f in frames[:4])
-    extra = spark.range(100).cache()
-    extra.count()
-    g._GATE_CACHES += [extra]                 # __iadd__
-    assert len(g._GATE_CACHES) == cap
-    g._GATE_CACHES.insert(0, extra)           # insert
-    assert len(g._GATE_CACHES) == cap
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
+def test_cache_scope_frees_every_persisting_call(spark):
+    """Every library call that persists a frame outliving it records
+    that frame with the open cache scope, and the scope frees them all
+    on exit, exit by exception included; an Engine used outside any
+    scope frees its statements' frames with release_caches()."""
+    from cantera_table_spark.engine import Engine
+    from cantera_table_spark.functions.dedup import duplicate_clusters
+    from cantera_table_spark.functions.ml import logreg_train_score
+    from cantera_table_spark.functions.similarity import semantic_dedup
+    from cantera_table_spark.functions.text import ppl_buckets
+    from cantera_table_spark.model import Catalog
+    from cantera_table_spark.operators.correlate import correlate_sets
+    from cantera_table_spark.session import cache_scope, persist
+
+    postings = spark.createDataFrame(
+        [("f", d, 0.0) for d in range(8)] +
+        [("g", d, float(d % 4)) for d in range(16)] +
+        [("a", d, 0.0) for d in range(10)] +
+        [("b", d, 0.0) for d in range(10, 16)],
+        "keyword string, doc_id long, score double")
+    cat = Catalog(summaries=[spark.createDataFrame(
+        [(d, f"d{d}", "{}") for d in range(16)],
+        "doc_id long, key string, doc string")], indexes=[postings])
+    sets = postings.select("doc_id", "score")
+    pairs = spark.createDataFrame([(1, 3), (3, 5)], "doc_a long, doc_b long")
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i % 3), 0.5, float(i % 2)]) for i in range(12)],
+        "vec_id long, embedding array<double>")
+    texts = spark.createDataFrame(
+        [(i, "the cat sat on the mat " * (1 + i % 3)) for i in range(9)],
+        "doc_id long, text string")
+    feats = spark.createDataFrame(
+        [(float(i % 5), i % 2) for i in range(20)], "x double, y int")
+
+    spark.catalog.clearCache()
+    with cache_scope() as frames:
+        correlate_sets(postings, sets.filter("doc_id < 8"),
+                       sets.filter("doc_id >= 8")).collect()
+        Engine(cat).execute_script(
+            "CORRELATE QUERY (a), (b);")[0].collect()
+        duplicate_clusters(sets.select("doc_id"), pairs,
+                           small_graph_edges=0).collect()
+        semantic_dedup(emb, threshold=0.9, n_clusters=2).collect()
+        ppl_buckets(texts).collect()
+        logreg_train_score(feats, ["x"], "y", steps=2)[0].collect()
+        assert not _cache_empty(spark)
+    # correlate_sets 4 + Engine CORRELATE 4 + labels + assignment +
+    # score table + trainable subset
+    assert len(frames) == 12, len(frames)
+    assert _cache_empty(spark)
+
+    with pytest.raises(RuntimeError), cache_scope():
+        persist(spark.range(5)).count()
+        raise RuntimeError("boom")
+    assert _cache_empty(spark)
+
+    eng = Engine(cat)
+    eng.execute_script("CORRELATE QUERY (a), (b);")[0].collect()
+    assert not _cache_empty(spark)
+    eng.release_caches()
+    assert _cache_empty(spark)
 
 
-def test_gate_cache_registry_eviction_and_replacement(spark):
-    """r9 review findings: trim must never evict the frame the current
-    mutation just registered (insert at the front included), replaced
-    entries (item/slice assignment) are unpersisted as they leave the
-    registry, and ``*=`` cannot grow past the cap either."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    frames = [spark.range(i + 1).cache() for i in range(cap)]
-    for f in frames:
-        f.count()
-        g._GATE_CACHES.append(f)
-    fresh = spark.range(200).cache()
-    fresh.count()
-    g._GATE_CACHES.insert(0, fresh)           # at capacity, at front
-    assert len(g._GATE_CACHES) == cap
-    # the just-inserted frame SURVIVES; the oldest other entry went
-    assert fresh.storageLevel.useMemory
-    assert g._GATE_CACHES[0] is fresh
-    assert frames[0].storageLevel.useMemory is False
-    # scalar replacement unpersists the displaced frame
-    repl = spark.range(300).cache()
-    repl.count()
-    displaced = g._GATE_CACHES[1]
-    g._GATE_CACHES[1] = repl
-    assert displaced.storageLevel.useMemory is False
-    assert repl.storageLevel.useMemory
-    # slice replacement unpersists the whole displaced run
-    r2 = spark.range(400).cache()
-    r2.count()
-    displaced_run = list(g._GATE_CACHES[2:4])
-    g._GATE_CACHES[2:4] = [r2]
-    assert all(e.storageLevel.useMemory is False for e in displaced_run)
-    # *= enforces the cap too (docstring's every-growth-path claim)
-    g._GATE_CACHES *= 3
-    assert len(g._GATE_CACHES) == cap
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
+def test_corr02_scope_frees_its_frames(spark):
+    """corr02 calls correlate_sets itself, so its histogram, kind and
+    split frames (and the gate's own ts-postings aggregate) must all
+    be freed when the gate runs inside a cache scope."""
+    from cantera_table_spark import gate
+    from cantera_table_spark.session import cache_scope
+    from tests.conftest import SF_SMOKE
+
+    spark.catalog.clearCache()
+    with cache_scope() as frames:
+        gate.queries()["corr02_event_prediction"](spark, SF_SMOKE) \
+            .collect()
+        assert not _cache_empty(spark)
+    assert len(frames) >= 4, len(frames)
+    assert _cache_empty(spark)
+
+
+@pytest.mark.slow
+def test_jpeg_matmul_dct_byte_identity():
+    """The DCT's byte-identity with the einsum form depends on the BLAS
+    build numpy links, so the proof runs on every platform the suite
+    runs on."""
+    _load("verify_jpeg_matmul").main()
 
 
 def test_native_state_store_conflict_raises(spark):
@@ -233,23 +243,3 @@ def test_oracle_shared_fragments_in_lockstep():
     n = min(common_suffix(pq[0], pq[1]), common_suffix(pq[0], pq[2]))
     # the shared ADC-rank suffix (GROUP BY + final approx_d2 select)
     assert n >= 200 and "approx_d2" in pq[0][-n:], (n, pq[0][-50:])
-
-
-def test_gate_cache_trim_keeps_duplicate_registrations_cached(spark):
-    """r11 review: evicting ONE of a frame's duplicate registrations
-    must not unpersist the copy still tracked by the registry."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    dup = spark.range(123).cache()
-    dup.count()
-    g._GATE_CACHES.append(dup)
-    g._GATE_CACHES.append(dup)          # duplicate registration
-    for i in range(cap - 1):            # overflow -> trims oldest (dup)
-        f = spark.range(i + 2).cache()
-        f.count()
-        g._GATE_CACHES.append(f)
-    assert g._GATE_CACHES.count(dup) == 1     # one copy evicted
-    assert dup.storageLevel.useMemory         # ...but still cached
-    g.release_gate_caches()
-    assert not dup.storageLevel.useMemory     # final copy unpersists

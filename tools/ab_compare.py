@@ -8,9 +8,9 @@ Usage:
 For each gate, runs ``repeats`` interleaved pairs (new, old, new, old,
 ...) of the gate's query with a noop-sink write, ALL inside one
 SparkSession/JVM, and prints per-leg timings plus medians.  Between
-legs the gate caches are drained, the Spark cache cleared, and a
-driver-side GC nudged — the same inter-phase hygiene bench.py applies —
-so neither leg inherits the other's cached blocks.
+legs the Spark cache is cleared and a driver-side GC nudged — the same
+inter-phase hygiene bench.py applies — so neither leg inherits the
+other's cached blocks.
 
 Tree switching purges every ``cantera_table_spark`` module and swaps
 ``sys.path[0]``; the JVM, executor pool, and codegen cache persist
@@ -66,7 +66,6 @@ def main() -> None:
                 gate.queries()[name](spark, sf_dir) \
                     .write.mode("overwrite").format("noop").save()
                 legs[label].append(round(time.monotonic() - t0, 3))
-                gate.release_gate_caches()
                 spark.catalog.clearCache()
                 spark.sparkContext._jvm.System.gc()  # noqa: SLF001
         results[name] = legs

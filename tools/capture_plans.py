@@ -70,7 +70,6 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)
-        gate.release_gate_caches()
         spark.catalog.clearCache()
         print(f"wrote {path} ({len(text)} bytes)")
     spark.stop()

@@ -22,7 +22,7 @@ import pyarrow.types as pat
 sys.path.insert(0, ".")
 
 from cantera_table_spark import gate  # noqa: E402
-from cantera_table_spark.session import get_spark  # noqa: E402
+from cantera_table_spark.session import cache_scope, get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -123,19 +123,15 @@ def main():
     n_pass = n_fail = 0
     for name in names:
         try:
-            sdf = qs[name](spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            # gate._engine's shared postings cache survives the scope
+            with cache_scope():
+                sdf = qs[name](spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
-        finally:
-            # drop caches registered by the gate body (cluster labels,
-            # quantized tables) so storage doesn't accumulate across
-            # the 101-gate sweep; the shared postings cache is NOT in
-            # this registry and survives
-            gate.release_gate_caches()
         if name not in oracles:
             print(f"  ok {name}: rows-only ({len(srows)} rows)")
             n_pass += 1

@@ -26,7 +26,7 @@ sys.path.insert(0, ".")
 
 from cantera_table_spark import gate  # noqa: E402
 from cantera_table_spark.plans.inspect import explain_str  # noqa: E402
-from cantera_table_spark.session import get_spark  # noqa: E402
+from cantera_table_spark.session import cache_scope, get_spark  # noqa: E402
 
 # gate -> (pattern -> reason the hit is bounded/intended)
 _CENTROID_CROSS = ("centroid/codebook table broadcast against every "
@@ -210,14 +210,12 @@ def main() -> int:
         if name_filter and name_filter not in name:
             continue
         try:
-            df = qs[name](spark, sf_dir)
-            hits = lint_one(name, df)
+            with cache_scope():
+                hits = lint_one(name, qs[name](spark, sf_dir))
         except Exception as e:  # plan build failed entirely
             print(f"LINT-ERR {name}: {e}")
             n_bad += 1
             continue
-        finally:
-            gate.release_gate_caches()
         if hits:
             print(f"LINT {name}: {', '.join(hits)}")
             n_bad += 1

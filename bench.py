@@ -28,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from cantera_table_spark.engine import Engine  # noqa: E402
 from cantera_table_spark.model import (  # noqa: E402
     Catalog, derive_documents, derive_label_postings, derive_postings,
 )
@@ -193,13 +192,10 @@ def main() -> None:
         # excluded from phase timings on purpose.
         spark.sparkContext._jvm.System.gc()
 
-    # Route gate DSL queries through the parquet-backed catalog.  A
-    # FRESH Engine per call preserves gate._engine's contract (only the
-    # catalog is memoized there): a single shared instance would leak
-    # SET output_format/count_mode state across phases if a
-    # session-state gate ever joins BENCH_QUERIES (r11 review).
-    gate._engine = \
-        lambda s, d: Engine(catalog, unique_postings=True)  # noqa: SLF001
+    # Route gate DSL queries through the parquet-backed catalog (each
+    # gate call still builds a fresh Engine, so SET output_format /
+    # count_mode state cannot leak across phases).
+    gate.use_catalog(spark, sf_dir, catalog)
 
     for name in BENCH_QUERIES:
         if ONLY and name not in ONLY:

@@ -6,9 +6,9 @@ Scale design notes (100 TB posture):
 
 - exact dedup is a hash-groupBy — partial aggregation map-side, one
   shuffle on the content hash.
-- MinHash/LSH: signatures are a narrow per-doc table; the LSH band join
-  shuffles only (band_idx, band_hash) keys, and candidate verification
-  touches only colliding pairs — never the O(n^2) cross join.
+- MinHash/LSH: signatures and band hashes are per-row folds; the LSH
+  band join shuffles only (band, band_hash) keys, and candidate
+  verification touches only colliding pairs — never the O(n^2) join.
 - SimHash: 32-bit signature per doc from one aggregate over exploded
   (token-hash, bit) rows; near-dup = signatures at small Hamming
   distance, found by banding the signature bytes.
@@ -46,7 +46,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 
 def shingles(df: DataFrame, text_col: str = "text",
              id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
+    """Distinct word n-gram shingles per document: (id, shingle).  Same
+    rows as exploded_shingles(shingle_arrays(...)), but faster for
+    pure-Jaccard callers (sf0.1, 4 cores: dd03 5.09 vs 6.86 s)."""
     toks = tokens(F.col(text_col))
     # sequence(1, 0) would count DOWN ([1, 0]) and slice(_, 0, n) is a
     # runtime error, so documents with < n tokens are filtered before
@@ -113,25 +115,22 @@ def exploded_shingles(arrs: DataFrame) -> DataFrame:
 
 
 def _sig_array(shingles_arr: Column, k: int = 16) -> Column:
-    """k-element MinHash signature array from a shingle array — pure
-    map expressions, no shuffle.  Same hash family as
-    :func:`minhash_signatures`: h_i(x) = ((2i+1) * x + 12345*i + 1)
-    mod p over the portable md5 base hash; sig_i = min over the array.
+    """k-element MinHash signature array from a NON-EMPTY shingle array
+    (array_min of an empty one is NULL) — pure map expressions, no
+    shuffle.  h_i(x) = ((2i+1) * x + 12345*i + 1) mod p over the
+    portable md5 base hash x; sig_i = min over the array.
 
-    Shape (r13): transposed to k passes of ``array_min`` over the
-    md5-hashed array instead of one fold carrying a k-array
-    accumulator — bit-identical mins (law-tested vs the frozen grouped
-    pipelines), but the fold allocated a fresh k-element zip_with
-    array PER SHINGLE where this allocates k arrays PER DOCUMENT
-    (~10% off the interpreted higher-order evaluation; HOF lambdas do
-    not enter whole-stage codegen, which is the remaining honest cost
-    of the zero-shuffle shape).  The hashed array binds through a
+    Known recall limit: every h_i is linear in the one md5 hash, so the
+    k minima are correlated, not k independent permutations — a
+    planted near copy can miss every band (perfbench/tests/
+    test_oracle.py::test_lsh_misses_a_planted_copy_on_seed_3).  A new
+    family would change every dd oracle and the perfbench oracle.
+
+    Shape: k passes of ``array_min`` over the md5-hashed array (k
+    arrays per DOCUMENT, where a fold carrying a k-array accumulator
+    allocated one per SHINGLE).  The hashed array binds through a
     one-element ``transform`` so md5 evaluates ONCE per shingle, not
-    once per hash function (the FoldRecompute class); callers must
-    guarantee a non-empty array (shingle_arrays filters docs with
-    < n tokens), matching the grouped form's drop of shingle-less
-    docs — array_min of the (impossible) empty array would be NULL
-    where the fold's identity was the prime."""
+    once per hash function (the FoldRecompute class)."""
     xs = F.transform(shingles_arr, md5_int)
     return F.get(F.transform(F.array(xs), lambda xv: F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
@@ -142,11 +141,9 @@ def _sig_array(shingles_arr: Column, k: int = 16) -> Column:
 
 
 def minhash_signature_rows(arrs: DataFrame, k: int = 16) -> DataFrame:
-    """(doc_id, h_idx, sig) from :func:`shingle_arrays` output —
-    bit-identical to minhash_signatures(shingles(df), k) but computed
-    as a pure map + posexplode: the per-doc groupBy shuffle is gone
-    (guide §2.4; the min over a document's shingles never needed rows
-    to cross partitions)."""
+    """(doc_id, h_idx, sig) from :func:`shingle_arrays` output — the
+    long-form signature table as a pure map + posexplode (guide §2.4:
+    a per-document min never needs rows to cross partitions)."""
     return arrs.select(
         "doc_id",
         F.posexplode(_sig_array(F.col("__shingles"), k))
@@ -155,10 +152,9 @@ def minhash_signature_rows(arrs: DataFrame, k: int = 16) -> DataFrame:
 
 def lsh_band_hashes(arrs: DataFrame, k: int = 16,
                     bands: int = 4) -> DataFrame:
-    """(doc_id, band, band_hash) from :func:`shingle_arrays` output —
-    bit-identical to the groupBy(doc_id, band) banding inside
-    :func:`lsh_candidate_pairs` (same "h_idx:sig" string elements,
-    same lexicographic sort, same md5), with ZERO shuffles.
+    """(doc_id, band, band_hash) from :func:`shingle_arrays` output,
+    with ZERO shuffles: band_hash is the md5 of the band's sorted
+    "h_idx:sig" strings.
 
     The signature array is materialized behind its own Generate
     barrier before the per-band transform: the band lambda indexes it
@@ -186,85 +182,18 @@ def lsh_band_hashes(arrs: DataFrame, k: int = 16,
 def lsh_candidate_pairs_arrays(arrs: DataFrame, k: int = 16,
                                bands: int = 4,
                                max_bucket: int | None = None) -> DataFrame:
-    """Candidate pairs from :func:`shingle_arrays` output — the same
-    bucket semantics (including the ``max_bucket`` star fallback) as
-    :func:`lsh_candidate_pairs`, but candidate generation reaches the
-    bucket join with ZERO upstream shuffles: the signature groupBy and
-    the banding groupBy are per-row folds.  The only exchange left is
-    the (band, band_hash) one the pair join fundamentally requires."""
+    """Candidate pairs (doc_a < doc_b) from :func:`shingle_arrays`
+    output: docs sharing any full (band, band_hash) bucket.  The only
+    exchange is the one the bucket join requires.
+
+    ``max_bucket`` bounds the pair blow-up of a degenerate bucket (e.g.
+    thousands of boilerplate-identical pages): larger buckets emit a
+    linear STAR around their minimum doc_id instead of all pairs.  The
+    hub keeps the bucket connected, so duplicate_clusters still merges
+    it; the recall trade is the direct pairs between non-hub members
+    of a MIXED oversized bucket.  None keeps the quadratic pairs."""
     return _bucketed_pairs(lsh_band_hashes(arrs, k=k, bands=bands),
                            ["band", "band_hash"], "doc_id", max_bucket)
-
-
-def minhash_signatures(sh: DataFrame, k: int = 16) -> DataFrame:
-    """MinHash signature, long form: (doc_id, h_idx, sig).
-
-    h_i(x) = ((2i+1) * x + 12345*i + 1) mod p over the portable shingle
-    hash x; sig_i = min over the doc's shingles.
-
-    One pass: the base hash is materialized once per shingle, the k mins
-    aggregate in a single groupBy (map-side combined), and the wide row
-    unpivots with ``stack`` — no k-fold row explosion, no per-element
-    md5 recomputation.
-    """
-    hashed = sh.withColumn("__x", md5_int(F.col("shingle")))
-    aggs = [F.min(((2 * i + 1) * F.col("__x") + 12345 * i + 1)
-                  % MINHASH_PRIME).alias(f"s{i}") for i in range(k)]
-    wide = hashed.groupBy("doc_id").agg(*aggs)
-    stack = ", ".join(f"{i}, s{i}" for i in range(k))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({k}, {stack}) AS (h_idx, sig)"))
-
-
-def lsh_candidate_pairs(sigs: DataFrame, bands: int = 4,
-                        k: int | None = None,
-                        max_bucket: int | None = None) -> DataFrame:
-    """Band the signature into ``bands`` contiguous groups of k/bands
-    rows and join on (band, band-hash): docs sharing any full band
-    become candidate pairs (a < b).  Only colliding keys shuffle.
-
-    Pass the same ``k`` given to minhash_signatures to keep plan
-    construction lazy; with k=None it is derived from the signatures
-    (max h_idx + 1), which costs one eager aggregation pass over the
-    signature pipeline — correct but avoid it on large inputs.
-
-    ``max_bucket`` bounds the per-bucket pair blow-up: a degenerate
-    (band, band_hash) bucket — e.g. thousands of boilerplate-identical
-    pages, the typical pretraining-corpus shape — would otherwise pair
-    quadratically inside the bucket.  Buckets larger than ``max_bucket``
-    emit a linear STAR instead (every member paired with the bucket's
-    minimum doc_id): connectivity through the hub is preserved, so
-    downstream clustering (duplicate_clusters) still merges the whole
-    bucket when verification passes, and for the all-identical case the
-    final clusters are exactly the quadratic ones.  The documented
-    recall trade: direct pairs between non-hub members of a MIXED
-    oversized bucket are not emitted.  None (default) keeps the exact
-    quadratic semantics."""
-    if k is None:
-        first = sigs.agg(F.max("h_idx").alias("m")).first()
-        if first is None or first["m"] is None:
-            return _empty_result(sigs, [("doc_a", "doc_id"),
-                                        ("doc_b", "doc_id")])
-        k = int(first["m"]) + 1
-    return _bucketed_pairs(_banded_from_sigs(sigs, bands, k),
-                           ["band", "band_hash"], "doc_id", max_bucket)
-
-
-def _banded_from_sigs(sigs: DataFrame, bands: int, k: int) -> DataFrame:
-    """(doc_id, band, band_hash) from LONG-FORM signatures — the
-    grouped banding, kept for callers that hold a stored long-form
-    signature/shingle table (incremental_dedup's ``corpus_sh``
-    contract).  Fresh pipelines use :func:`lsh_band_hashes`, which
-    computes the identical hashes with zero shuffles."""
-    if k % bands:
-        raise ValueError(f"k={k} must divide evenly into bands={bands}")
-    rows = k // bands
-    return (sigs.withColumn("band", (F.col("h_idx") / rows).cast("int"))
-            .groupBy("doc_id", "band")
-            .agg(F.md5(F.concat_ws(",", F.sort_array(
-                F.collect_list(F.concat_ws(":", "h_idx", "sig")))))
-                .alias("band_hash")))
 
 
 def _empty_result(df: DataFrame, fields) -> DataFrame:
@@ -288,7 +217,8 @@ def _bucketed_pairs(banded: DataFrame, bucket_cols: list[str],
     """Shared LSH bucket -> pair expansion with the hot-bucket bound.
 
     Small buckets pair quadratically; buckets over ``max_bucket`` emit
-    the linear star around the minimum id (see lsh_candidate_pairs).
+    the linear star around the minimum id (see
+    lsh_candidate_pairs_arrays).
     ``carry`` columns (e.g. the vectors for cosine verification) are
     propagated to pair columns ``<c>_a`` / ``<c>_b``."""
     carry = carry or []
@@ -912,20 +842,16 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
                  .agg(F.min(F.struct("doc_id", "__text")).alias("__r"))
                  .select(F.col("__r.doc_id").alias("doc_id"),
                          F.col("__r.__text").alias("__text")))
-        # fresh corpus text: the map-only LSH path end to end
         corpus_arrs = shingle_arrays(creps, text_col="__text", n=n)
-        banded = lsh_band_hashes(
-            corpus_arrs.unionByName(batch_arrs), k=k, bands=bands)
-        corpus_long = exploded_shingles(corpus_arrs)
     else:
         # stored long-form shingle table (the production index shape):
-        # only the corpus side pays the grouped banding; the fresh
-        # batch side folds per row and unions at the banded level —
-        # the hashes are bit-identical by construction (law-tested)
-        corpus_long = corpus_sh.select("doc_id", "shingle")
-        banded = _banded_from_sigs(
-            minhash_signatures(corpus_long, k=k), bands, k).unionByName(
-            lsh_band_hashes(batch_arrs, k=k, bands=bands))
+        # one groupBy folds it back to per-doc arrays, the corpus's
+        # only shuffle before the band join
+        corpus_arrs = corpus_sh.groupBy("doc_id").agg(
+            F.collect_set("shingle").alias("__shingles"))
+    banded = lsh_band_hashes(corpus_arrs.unionByName(batch_arrs),
+                             k=k, bands=bands)
+    corpus_long = exploded_shingles(corpus_arrs)
     cands = _bucketed_pairs(banded, ["band", "band_hash"], "doc_id",
                             max_bucket)
     sh = corpus_long.unionByName(exploded_shingles(batch_arrs))

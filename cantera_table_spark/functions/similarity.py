@@ -309,7 +309,7 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8,
 
     ``max_bucket`` caps degenerate buckets (e.g. a corpus with
     thousands of identical embeddings collapsing into one band bucket)
-    with the same linear-star fallback as dedup.lsh_candidate_pairs —
+    with the linear-star fallback of dedup.lsh_candidate_pairs_arrays —
     every emitted pair is still exact-cosine verified, so precision is
     unaffected; only direct pairs between non-hub members of an
     oversized MIXED bucket can be missed."""

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from cantera_table_spark.engine import Engine
 from cantera_table_spark.dsl.parser import parse_script, parse_query
-from cantera_table_spark.model import load_table, testdata_catalog
+from cantera_table_spark.model import Catalog, load_table, testdata_catalog
 from cantera_table_spark.session import persist
 
 # ---------------------------------------------------------------------------
@@ -162,16 +162,26 @@ def oracle_sql() -> dict[str, str]:
     return _ordered(_ORACLES)
 
 
-_CATALOG_CACHE: dict[tuple[int, str], object] = {}
+_CATALOG_CACHE: dict[tuple[str, str], Catalog] = {}
+
+
+def _catalog_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    # applicationId, not id(spark): a new session can reuse a stopped
+    # session's object address and would inherit dead cached plans
+    return (spark.sparkContext.applicationId, sf_dir)
+
+
+def use_catalog(spark: SparkSession, sf_dir: str, catalog: Catalog) -> None:
+    """Serve the engine-backed gates on (spark, sf_dir) from
+    ``catalog``, used as given, instead of the derived testdata one."""
+    _CATALOG_CACHE[_catalog_key(spark, sf_dir)] = catalog
 
 
 def _engine(spark: SparkSession, sf_dir: str) -> Engine:
-    """Engine over the testdata catalog; the derived postings are
-    memoized and Spark-cached per (session, sf_dir) so a gate run's ~50
-    queries tokenize the corpus once, not once each."""
-    # applicationId, not id(spark): a new session can reuse a stopped
-    # session's object address and would inherit dead cached plans
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Engine over the testdata catalog (or the :func:`use_catalog` one);
+    derived postings are memoized and Spark-cached per (session, sf_dir)
+    so a gate run's ~50 queries tokenize the corpus once, not once each."""
+    key = _catalog_key(spark, sf_dir)
     cat = _CATALOG_CACHE.get(key)
     if cat is None:
         cat = testdata_catalog(spark, sf_dir)

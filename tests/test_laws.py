@@ -95,19 +95,22 @@ def test_sample_is_deterministic_subset(spark, a):
 def test_lsh_bucket_bound_is_identity_when_unreached(spark, docs_):
     """With max_bucket >= every bucket size, the bounded pair expansion
     must equal the unbounded one for ANY signature multiset (the star
-    fallback only engages on oversized buckets)."""
-    from cantera_table_spark.functions.dedup import lsh_candidate_pairs
-    rows = [(doc, h, (sig * 7919 + h) % 13)
-            for doc, sig in dict(docs_).items() for h in range(8)]
+    fallback only engages on oversized buckets).  Band hashes are fed
+    straight in: 4 bands per doc, few distinct hashes, so buckets
+    collide freely."""
+    from cantera_table_spark.functions.dedup import _bucketed_pairs
+    rows = [(doc, band, str((sig * 7919 + band) % 13))
+            for doc, sig in dict(docs_).items() for band in range(4)]
     if not rows:
         return
-    sigs = spark.createDataFrame(rows, "doc_id long, h_idx int, sig long")
-    unbounded = sorted((r.doc_a, r.doc_b) for r in
-                       lsh_candidate_pairs(sigs, bands=4, k=8).collect())
-    bounded = sorted((r.doc_a, r.doc_b) for r in
-                     lsh_candidate_pairs(sigs, bands=4, k=8,
-                                         max_bucket=10_000).collect())
-    assert bounded == unbounded
+    banded = spark.createDataFrame(
+        rows, "doc_id long, band int, band_hash string")
+
+    def pairs(max_bucket):
+        return sorted((r.doc_a, r.doc_b) for r in _bucketed_pairs(
+            banded, ["band", "band_hash"], "doc_id", max_bucket).collect())
+
+    assert pairs(10_000) == pairs(None)
 
 
 # ---------------------------------------------------------------------------

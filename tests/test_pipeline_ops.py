@@ -41,15 +41,15 @@ def test_shingles_and_jaccard(spark):
 
 def test_minhash_lsh_candidates_contain_near_dups(spark):
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, minhash_signatures, shingles)
+        lsh_candidate_pairs_arrays, minhash_signature_rows, shingle_arrays)
     rows = [(1, "the quick brown fox jumps over the lazy dog today"),
             (2, "the quick brown fox jumps over the lazy dog tomorrow"),
             (3, "completely different words about spark engines here")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(shingles(d, n=2), k=16)
-    assert sigs.count() == 3 * 16
-    cands = {(r.doc_a, r.doc_b)
-             for r in lsh_candidate_pairs(sigs, bands=4).collect()}
+    arrs = shingle_arrays(d, n=2)
+    assert minhash_signature_rows(arrs, k=16).count() == 3 * 16
+    cands = {(r.doc_a, r.doc_b) for r in
+             lsh_candidate_pairs_arrays(arrs, k=16, bands=4).collect()}
     assert (1, 2) in cands
     assert (1, 3) not in cands and (2, 3) not in cands
 
@@ -323,7 +323,7 @@ def test_empty_input_schemas_preserve_id_types(spark):
     long — an empty int-id shard must union cleanly with a non-empty
     one."""
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, minhash_signatures, shingles)
+        lsh_candidate_pairs_arrays, shingle_arrays)
     from cantera_table_spark.functions.similarity import (
         brute_force_topk_pandas, hyperplane_signature)
     from pyspark.sql import types as T
@@ -336,8 +336,7 @@ def test_empty_input_schemas_preserve_id_types(spark):
     assert hs.count() == 0
 
     empty_docs = spark.createDataFrame([], "doc_id int, text string")
-    sigs = minhash_signatures(shingles(empty_docs), k=16)
-    pairs = lsh_candidate_pairs(sigs)       # k=None -> empty fallback
+    pairs = lsh_candidate_pairs_arrays(shingle_arrays(empty_docs))
     assert pairs.schema["doc_a"].dataType == T.IntegerType()
     assert pairs.schema["doc_b"].dataType == T.IntegerType()
     assert pairs.count() == 0
@@ -416,17 +415,15 @@ def test_lsh_hot_bucket_bound(spark):
     quadratically when max_bucket is set, and clustering over the
     bounded pairs must still merge the whole duplicate group."""
     from cantera_table_spark.functions.dedup import (
-        duplicate_clusters, lsh_candidate_pairs, minhash_signatures,
-        shingles)
+        duplicate_clusters, lsh_candidate_pairs_arrays, shingle_arrays)
     n_dup = 200
     rows = [(i, "the same boilerplate page content repeated verbatim "
                 "across the corpus many times over") for i in range(n_dup)]
     rows += [(1000, "a genuinely different document about spark plans"),
              (1001, "another unrelated text with other words entirely")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(shingles(docs), k=16)
-
-    bounded = lsh_candidate_pairs(sigs, bands=4, k=16, max_bucket=20)
+    bounded = lsh_candidate_pairs_arrays(shingle_arrays(docs), k=16,
+                                         bands=4, max_bucket=20)
     pairs = bounded.collect()
     # linear star, not ~n^2/2 quadratic: one hub pair per duplicate
     assert len(pairs) <= 4 * n_dup
@@ -1594,9 +1591,50 @@ def test_funnel_strict_ordering_and_retention(spark):
     assert ret[(0, 0)] == 5
 
 
+@pytest.mark.parametrize("max_bucket", [None, 1])
+def test_incremental_dedup_stored_shingles_match_fresh_text(spark,
+                                                            max_bucket):
+    """A stored long-form corpus shingle table (``corpus_sh``) admits
+    exactly what re-shingling the corpus text admits: the stored table
+    folds back to per-doc arrays and shares the fresh branch's banding
+    and verification — with exact bucket pairing and with the star
+    fallback engaged on every shared bucket (max_bucket=1)."""
+    from cantera_table_spark.functions.dedup import incremental_dedup, shingles
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "for the full length of the document body text")
+    novel = ("novel text body alpha beta gamma delta epsilon zeta eta "
+             "theta iota kappa")
+    garden = ("entirely novel text about gardening tomatoes in clay soil "
+              "with compost and careful irrigation schedules")
+    corpus = spark.createDataFrame(
+        [(0, base),
+         (2, "completely different corpus content here about sailing "
+             "ships across the northern sea"),
+         (4, "completely different corpus content here about sailing "
+             "boats across the northern sea")],
+        "doc_id long, text string")
+    batch = spark.createDataFrame(
+        [(1, base),                                 # exact dup of corpus
+         (3, base + " with one tiny suffix edit"),  # near dup of corpus
+         (5, garden), (7, garden),                  # batch-internal clone
+         (9, novel),
+         (11, novel + " slightly changed"),         # near dup of doc 9
+         (13, None)],
+        "doc_id long, text string")
+
+    def admitted(**kw):
+        return {r["doc_id"]: r["n_copies"] for r in incremental_dedup(
+            batch, corpus, min_jaccard=0.5, max_bucket=max_bucket,
+            **kw).collect()}
+
+    fresh = admitted()
+    assert fresh == {5: 2, 9: 1, 13: 1}
+    assert admitted(corpus_sh=shingles(corpus)) == fresh
+
+
 @pytest.mark.slow
 def test_incremental_dedup_laws(spark):
-    from cantera_table_spark.functions.dedup import incremental_dedup, shingles
+    from cantera_table_spark.functions.dedup import incremental_dedup
     from pyspark.sql import functions as F
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "for the full length of the document body text")
@@ -1617,12 +1655,6 @@ def test_incremental_dedup_laws(spark):
            for r in incremental_dedup(batch, corpus,
                                       min_jaccard=0.5).collect()}
     assert got == {5: 2, 9: 1}
-    # precomputed corpus shingles give the identical result
-    pre = shingles(corpus)
-    got2 = {r["doc_id"]: r["n_copies"]
-            for r in incremental_dedup(batch, corpus, min_jaccard=0.5,
-                                       corpus_sh=pre).collect()}
-    assert got2 == got
     # greedy rule: a batch doc matching only an EARLIER batch doc is
     # rejected even though the corpus never saw either
     batch2 = spark.createDataFrame(

@@ -171,19 +171,22 @@ def test_shingle_arrays_explode_equals_shingles(spark, docs):
 
 def test_array_lsh_candidate_pairs_match_sig_path(spark, docs):
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, lsh_candidate_pairs_arrays,
-        minhash_signatures, shingle_arrays, shingles)
-    sh = shingles(docs)
-    exp = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(sh, k=16), bands=4, k=16).collect()}
-    got = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_arrays(
-        shingle_arrays(docs), k=16, bands=4).collect()}
+        _bucketed_pairs, lsh_candidate_pairs_arrays, shingle_arrays,
+        shingles)
+    frozen = _frozen_banded(_frozen_signatures(shingles(docs)))
+
+    def pairs(df):
+        return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+
+    exp = pairs(_bucketed_pairs(frozen, ["band", "band_hash"], "doc_id",
+                                None))
+    got = pairs(lsh_candidate_pairs_arrays(shingle_arrays(docs), k=16,
+                                           bands=4))
     assert got == exp
     assert len(exp) > 0  # the clone pair (0, 8) at minimum
     # the hot-bucket star fallback must behave identically too
-    exp_b = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(sh, k=16), bands=4, k=16,
-        max_bucket=1).collect()}
-    got_b = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_arrays(
-        shingle_arrays(docs), k=16, bands=4, max_bucket=1).collect()}
+    exp_b = pairs(_bucketed_pairs(frozen, ["band", "band_hash"], "doc_id",
+                                  1))
+    got_b = pairs(lsh_candidate_pairs_arrays(shingle_arrays(docs), k=16,
+                                             bands=4, max_bucket=1))
     assert got_b == exp_b

@@ -21,7 +21,6 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from cantera_table_spark import gate  # noqa: E402
-from cantera_table_spark.engine import Engine  # noqa: E402
 from cantera_table_spark.model import (  # noqa: E402
     Catalog, derive_documents, derive_label_postings, derive_postings,
 )
@@ -60,8 +59,7 @@ def main() -> None:
         indexes=[spark.read.parquet(f"{work}/postings")],
         postings_buckets=n_buckets,
     )
-    gate._engine = \
-        lambda s, d: Engine(catalog, unique_postings=True)  # noqa: SLF001
+    gate.use_catalog(spark, sf_dir, catalog)
 
     qs = gate.queries()
     for name in names:
